@@ -4,15 +4,11 @@ The reference defines dedup identity via ``normalize_url_for_deep_crawl``
 (semantics transcribed from /root/reference/crawl4ai/utils.py:2334-2390;
 behavior pinned by golden tests, not copied code) and a lighter cached
 variant (utils.py:2392-2429).  Per-row parity matters bit-for-bit, so the
-canonical implementation is plain Python on top of stdlib ``urllib.parse``
-executed inside Arrow-batched pandas UDFs; a pure-Catalyst column
-expression (``light_normalize_expr``) covers the fast path for URLs that
-are already absolute http(s) — that one stays entirely JVM-side.
+canonical implementation is plain Python on top of stdlib ``urllib.parse``.
 
-Design note (scale): the pandas-UDF normalizer is the only Python in the
-frontier-expansion hot path.  It is batched by Arrow (10k rows/batch) and
-is embarrassingly parallel — no shuffle, no state — so it scales linearly
-with executors; the bench shows it sustains >1M URLs/sec/core.
+Design note (scale): ``normalize_deep_udf`` keeps self-canonical hrefs
+in the JVM and sends only the rest to the stdlib function (guard and
+parity argument in its docstring; measured in BENCH/BASELINE.md R6.1).
 """
 
 from __future__ import annotations
@@ -193,71 +189,52 @@ def is_valid_crawl_url(url: str) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# pandas UDFs (Arrow-batched — the only sanctioned Python crossing)
+# deep-crawl canonicalizer as a column: JVM guard + stdlib residue
 # ---------------------------------------------------------------------------
 
 
 @F.pandas_udf(T.StringType())
-def normalize_deep_udf(href: pd.Series, base_url: pd.Series) -> pd.Series:
+def _normalize_deep_arrow(href: pd.Series, base_url: pd.Series) -> pd.Series:
     return pd.Series(
         [normalize_url_for_deep_crawl(h, b) for h, b in zip(href, base_url)], dtype=object
     )
 
 
-@F.pandas_udf(T.StringType())
-def base_domain_udf(url: pd.Series) -> pd.Series:
-    return url.map(lambda u: get_base_domain(u) if u is not None else None)
+# printable ASCII minus the characters that give urlsplit/urlparse work to
+# do: IPv6 brackets, backslash, params, query, fragment (Java class syntax)
+_PATH_CH = r"[!-~&&[^\[\]\\;?#]]"
+_NETLOC_CH = r"[!-~&&[^\[\]\\;?#/]]"
+# \z, not $: Java's $ also matches before a final line terminator
+_SIMPLE_URL_RE = rf"(?i)^https?://{_NETLOC_CH}+(/{_PATH_CH}*)?\z"
+_HEAD_RE = r"^[^/]*//[^/]*"
+_TAIL_RE = r"^[^/]*//[^/]*(.*?)/*$"
 
 
-@F.pandas_udf(T.BooleanType())
-def is_external_udf(url: pd.Series, base_domain: pd.Series) -> pd.Series:
-    return pd.Series([is_external_url(u, b) for u, b in zip(url, base_domain)], dtype=bool)
+def normalize_deep_udf(href, base_url) -> Column:
+    """``normalize_url_for_deep_crawl(href, base_url)`` as a column.
 
-
-@F.pandas_udf(T.BooleanType())
-def is_valid_url_udf(url: pd.Series) -> pd.Series:
-    return url.map(lambda u: is_valid_crawl_url(u) if u is not None else False)
-
-
-_SIMPLE_URL_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#;\s]+(/[^?#;\s]*)?$"
-_HEAD_RE = r"^([A-Za-z][A-Za-z0-9+.\-]*://[^/?#;\s]+)"
-_PATH_ONLY_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#;\s]+(/[^?#;\s]*)?$"
-
-
-def with_canonical(df, href_col: str, base_col: str, out_col: str = "canon"):
-    """Hybrid deep-crawl canonicalizer (split-union, each row evaluated
-    exactly once):
-
-    * **fast path (JVM)** — hrefs that are already absolute http(s)-style
-      URLs with no query/fragment/params/whitespace/dot-segments are
-      *self-canonical up to case+slashes*: ``normalize_url_for_deep_crawl``
-      provably reduces to lower(scheme://netloc) + path.rstrip('/') on
-      this subset (urljoin is the identity — no dot segments — and the
-      query/fragment branches are vacuous).  Pure column expressions,
-      whole-stage-codegen'd.
-    * **slow path (Arrow UDF)** — everything else keeps exact stdlib
-      parity via :func:`normalize_deep_udf`.
-
-    Property-tested equal to the UDF on mixed corpora (tests/test_urls.py).
-
-    Measured note (local[32], 2M short URLs): the plain Arrow UDF ran
-    3.0 s vs 6.5 s for this hybrid — the split-union's double scan plus
-    three JVM regex extracts cost more than batched urllib.parse.  The
-    hybrid only pays off when per-row Python is much pricier than Arrow
-    batching makes it here; production paths therefore default to the
-    UDF, and this stays available as a measured alternative.
+    Rows whose href is *simple* are canonicalized by JVM expressions;
+    every other row goes to the stdlib function in an Arrow UDF, which
+    the simple rows feed with NULLs.  Simple means: an absolute
+    ``http(s)://`` href of printable ASCII with a non-empty netloc and no
+    ``[ ] \\ ; ? #`` or ``/.``, and a base that urlparse cannot reject
+    (NULL or ASCII without brackets).  On that set
+    ``urljoin`` returns the href's own components before any dot-segment
+    removal, ``strip`` is the identity, and the params, query and
+    fragment branches are vacuous, so the stdlib result reduces exactly
+    to ``lower(scheme://netloc) + path.rstrip('/')``.  Outputs and
+    exceptions therefore match the stdlib row for row.
     """
-    href = F.col(href_col)
-    simple = href.isNotNull() & href.rlike(_SIMPLE_URL_RE) & ~href.contains("/.")
+    href = F.col(href) if isinstance(href, str) else href
+    base = F.col(base_url) if isinstance(base_url, str) else base_url
+    # base == href only spares the base regex for the common (url, url) call
+    base_ok = base.isNull() | (base == href) | ~base.rlike(r"[^\x00-\x7F]|[\[\]]")
+    simple = href.isNotNull() & href.rlike(_SIMPLE_URL_RE) & ~href.contains("/.") & base_ok
     fast = F.concat(
-        F.lower(F.regexp_extract(href, _HEAD_RE, 1)),
-        F.regexp_replace(F.regexp_extract(href, _PATH_ONLY_RE, 1), "/+$", ""),
+        F.lower(F.regexp_extract(href, _HEAD_RE, 0)), F.regexp_extract(href, _TAIL_RE, 1)
     )
-    fast_rows = df.filter(simple).withColumn(out_col, fast)
-    slow_rows = df.filter(~simple).withColumn(
-        out_col, normalize_deep_udf(href, F.col(base_col))
-    )
-    return fast_rows.unionByName(slow_rows)
+    slow = _normalize_deep_arrow(F.when(~simple, href), F.when(~simple, base))
+    return F.when(simple, fast).otherwise(slow)
 
 
 # ---------------------------------------------------------------------------

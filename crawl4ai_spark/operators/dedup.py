@@ -36,7 +36,8 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -73,24 +74,32 @@ def _positions(h1: np.ndarray, h2: np.ndarray, m_bits: int) -> np.ndarray:
     return (h1[:, None] + idx * h2[:, None]) % np.uint64(m_bits)
 
 
-def _with_bloom_keys(df: DataFrame, url_col: str, n_partitions: int) -> DataFrame:
+def _bloom_keys(url: Column, n_partitions: int) -> tuple[Column, Column, Column]:
     """Shard id + the two 64-bit double-hashing keys, all JVM-side:
     murmur3 routes to the shard (the north rule's murmur3-of-canonical-URL
     key) and two seeded xxhash64 values drive the k probe positions.  No
     Python touches a URL string anywhere in the bloom build/test path —
-    the pandas stages below only do numpy bit arithmetic on int64s."""
-    url = F.col(url_col)
-    return (
-        df.withColumn("bloom_part", F.pmod(F.hash(url), F.lit(n_partitions)))
-        .withColumn("_h1", F.xxhash64(url))
-        .withColumn("_h2", F.xxhash64(F.lit("bloom2"), url))
-    )
+    the Python stages below only do numpy bit arithmetic on int64s."""
+    part = F.pmod(F.hash(url), F.lit(n_partitions))
+    return part, F.xxhash64(url), F.xxhash64(F.lit("bloom2"), url)
 
 
-def _key_arrays(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    h1 = pdf["_h1"].to_numpy(np.int64).view(np.uint64)
-    h2 = pdf["_h2"].to_numpy(np.int64).view(np.uint64) | np.uint64(1)
-    return h1, h2
+def _with_bloom_keys(df: DataFrame, url_col: str, n_partitions: int) -> DataFrame:
+    part, h1, h2 = _bloom_keys(F.col(url_col), n_partitions)
+    return df.withColumns({"bloom_part": part, "_h1": h1, "_h2": h2})
+
+
+def _key_arrays(h1, h2) -> tuple[np.ndarray, np.ndarray]:
+    """uint64 double-hashing keys from int64 columns (pandas or numpy)."""
+    k1 = np.asarray(h1, np.int64).view(np.uint64)
+    return k1, np.asarray(h2, np.int64).view(np.uint64) | np.uint64(1)
+
+
+def _probe(bits: np.ndarray, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+    """Per item: are all k bits set?  (shard is self-describing: m_bits =
+    array size)"""
+    pos = _positions(h1, h2, len(bits) * 8)
+    return ((bits[(pos >> 3).astype(np.int64)] >> (pos & 7).astype(np.uint8)) & 1).all(axis=1)
 
 
 def build_bloom(
@@ -100,7 +109,7 @@ def build_bloom(
 
     def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
         bits = np.zeros(m_bits // 8, np.uint8)
-        h1, h2 = _key_arrays(pdf)
+        h1, h2 = _key_arrays(pdf["_h1"], pdf["_h2"])
         pos = _positions(h1, h2, m_bits).ravel()
         np.bitwise_or.at(bits, (pos >> 3).astype(np.int64), (1 << (pos & 7)).astype(np.uint8))
         return pd.DataFrame(
@@ -219,11 +228,7 @@ def bloom_maybe_seen(
             bits = bits.copy()
             for b in bdf["bits"].iloc[1:]:
                 bits |= np.frombuffer(b, np.uint8)
-        mb = len(bits) * 8  # shard is self-describing (m_bits = array size)
-        h1, h2 = _key_arrays(cdf)
-        pos = _positions(h1, h2, mb)
-        hit = (bits[(pos >> 3).astype(np.int64)] >> (pos & 7).astype(np.uint8)) & 1
-        return cdf.assign(maybe_seen=hit.all(axis=1))
+        return cdf.assign(maybe_seen=_probe(bits, *_key_arrays(cdf["_h1"], cdf["_h2"])))
 
     return (
         cand.groupBy("bloom_part")
@@ -276,8 +281,9 @@ def anti_join_seen(
 def _bloom_tag_broadcast(
     candidates: DataFrame, blooms: DataFrame, url_col: str, n_partitions: int
 ) -> DataFrame:
-    """Shuffle-free bloom tag: merged shards broadcast to executors,
-    candidates tested in-place by mapInPandas (vectorized numpy).
+    """Shuffle-free bloom tag: merged shards broadcast to executors and a
+    scalar Arrow UDF probes them (vectorized numpy).  Only the shard id and
+    the two hash keys cross into Python, never the row or its strings.
     ``n_partitions`` must be the shard count the bloom was built with —
     routing uses the identical pmod(murmur3(url)) expression."""
     shards: dict[int, np.ndarray] = {}
@@ -286,28 +292,22 @@ def _bloom_tag_broadcast(
         p = int(r["bloom_part"])
         shards[p] = arr.copy() if p not in shards else (shards[p] | arr)
     bc = candidates.sparkSession.sparkContext.broadcast(shards)
-    with_part = _with_bloom_keys(candidates, url_col, n_partitions)
-    out_schema = T.StructType(
-        with_part.schema.fields + [T.StructField("maybe_seen", T.BooleanType())]
-    )
 
-    def gen(batches):
+    # an Arrow (not pandas) UDF: besides skipping pandas, its eval type
+    # differs from the canonicalizer's, so Catalyst does not inline an
+    # upstream ``normalize_deep_udf`` column into these three inputs
+    @F.arrow_udf(T.BooleanType())
+    def probe(part: pa.Array, h1: pa.Array, h2: pa.Array) -> pa.Array:
         local = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf.assign(maybe_seen=pd.Series([], dtype=bool))
-                continue
-            maybe = np.zeros(len(pdf), dtype=bool)
-            h1, h2 = _key_arrays(pdf)
-            parts = pdf["bloom_part"].to_numpy()
-            for p in np.unique(parts):
-                bits = local.get(int(p))
-                if bits is None:
-                    continue
+        parts = part.to_numpy()
+        k1, k2 = _key_arrays(h1.to_numpy(), h2.to_numpy())
+        maybe = np.zeros(len(parts), dtype=bool)
+        for p in np.unique(parts):
+            bits = local.get(int(p))
+            if bits is not None:
                 sel = parts == p
-                pos = _positions(h1[sel], h2[sel], len(bits) * 8)
-                hit = (bits[(pos >> 3).astype(np.int64)] >> (pos & 7).astype(np.uint8)) & 1
-                maybe[sel] = hit.all(axis=1)
-            yield pdf.assign(maybe_seen=maybe)
+                maybe[sel] = _probe(bits, k1[sel], k2[sel])
+        return pa.array(maybe)
 
-    return with_part.mapInPandas(gen, out_schema).drop("bloom_part", "_h1", "_h2")
+    part, h1, h2 = _bloom_keys(F.col(url_col), n_partitions)
+    return candidates.withColumn("maybe_seen", probe(part.cast("long"), h1, h2))

@@ -185,28 +185,118 @@ def test_bloom_merge(spark):
 
 def test_bloom_broadcast_equals_cogroup(spark):
     """anti_join_seen must produce identical survivors whether the bloom
-    test broadcasts (small bloom) or cogroups (big bloom)."""
+    test broadcasts (small bloom) or cogroups (big bloom) — for a merged
+    bloom, for unmerged multi-delta shards, and for a bloom missing a shard
+    id — and the broadcast path must add no columns."""
     from pyspark.sql import functions as F
 
     from crawl4ai_spark.operators.dedup import anti_join_seen, build_bloom
 
     cand = spark.range(2000).select(
         F.concat(F.lit("https://h"), (F.col("id") % 7).cast("string"),
-                 F.lit(".com/p"), F.col("id").cast("string")).alias("url")
+                 F.lit(".com/p"), F.col("id").cast("string")).alias("url"),
+        F.col("id").alias("n"),
     )
     seen = cand.filter(F.col("url").rlike("p[0-9]*[02468]$")).select("url")
-    blooms = build_bloom(seen, n_partitions=8, m_bits=1 << 16)
-    via_bcast = anti_join_seen(
-        cand, seen, blooms=blooms, n_partitions=8, bloom_broadcast_max_bytes=1 << 30
+    shard = F.pmod(F.hash("url"), F.lit(8))
+    seen_no3 = seen.filter(shard != 3)
+    h1 = F.col("url").contains("h1")
+
+    def bloom(df):
+        return build_bloom(df, n_partitions=8, m_bits=1 << 16)
+
+    cases = {
+        "merged": (seen, bloom(seen)),
+        "multi_delta": (seen, bloom(seen.filter(h1)).unionByName(bloom(seen.filter(~h1)))),
+        "absent_shard": (seen_no3, bloom(seen_no3)),
+    }
+    assert cases["multi_delta"][1].groupBy("bloom_part").count().filter("count > 1").count() > 0
+    assert 3 not in {r["bloom_part"] for r in cases["absent_shard"][1].collect()}
+    assert cand.filter(shard == 3).count() > 0
+    for name, (s, blooms) in cases.items():
+        via_bcast = anti_join_seen(
+            cand, s, blooms=blooms, n_partitions=8, bloom_broadcast_max_bytes=1 << 30
+        )
+        via_cogroup = anti_join_seen(
+            cand, s, blooms=blooms, n_partitions=8, bloom_broadcast_max_bytes=0
+        )
+        exact = cand.join(s, "url", "left_anti")
+        assert via_bcast.columns == cand.columns, name
+        a = sorted(tuple(r) for r in via_bcast.collect())
+        b = sorted(tuple(r) for r in via_cogroup.select(*cand.columns).collect())
+        c = sorted(tuple(r) for r in exact.collect())
+        assert a == b == c, name
+
+
+def test_frontier_wave_plan_shape(spark, monkeypatch):
+    """Canonicalize → bloom anti-join keeps its hot path out of Python:
+    no MapInPandas, the canonicalization Project is whole-stage codegen'd,
+    and every ArrowEvalPython input is either a masked (CASE WHEN … THEN
+    col END) href/base or an int64 bloom key that reads the canonical URL
+    as a column instead of recomputing it.  Guards against a plan that
+    silently falls back to interpreted or per-row-Python execution."""
+    import re
+
+    from crawl4ai_spark.functions.urls import normalize_deep_udf
+
+    frontier = spark.range(3000).select(
+        F.concat(F.lit("https://Host"), (F.col("id") % 9).cast("string"),
+                 F.lit(".example.com/p"), F.col("id").cast("string")).alias("url"),
+        (F.col("id") % 5).cast("double").alias("score"),
     )
-    via_cogroup = anti_join_seen(
-        cand, seen, blooms=blooms, n_partitions=8, bloom_broadcast_max_bytes=0
-    )
-    exact = cand.join(seen, "url", "left_anti")
-    a = sorted(r["url"] for r in via_bcast.collect())
-    b = sorted(r["url"] for r in via_cogroup.collect())
-    c = sorted(r["url"] for r in exact.collect())
-    assert a == b == c
+    seen = frontier.filter(F.col("url").endswith("0")).select("url")
+    blooms = dedup.build_bloom(seen, n_partitions=8, m_bits=1 << 16)
+    # anti_join_seen pins the tagged frame: record what it pins so the
+    # plan under the pin can be inspected after it has run
+    pinned = []
+    cls = type(frontier)
+    orig = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        pinned.append(self)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    canon = frontier.withColumn("canon", normalize_deep_udf(F.col("url"), F.col("url")))
+    out = dedup.anti_join_seen(canon, seen, url_col="canon", blooms=blooms, n_partitions=8)
+    out.write.format("noop").mode("overwrite").save()
+    assert pinned
+
+    def nodes(p):
+        yield p
+        name = p.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            yield from nodes(p.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            yield from nodes(p.plan())
+        else:
+            ch = p.children()
+            for i in range(ch.size()):
+                yield from nodes(ch.apply(i))
+
+    plans = [d._jdf.queryExecution().executedPlan() for d in pinned + [out]]
+    text = "\n".join(p.toString() for p in plans)
+    assert "MapInPandas" not in text
+    assert re.search(r"\*\(\d+\) Project \[[^\n]*RLIKE[^\n]* AS canon#", text), text
+    n_udf_inputs = 0
+    for p in plans:
+        for node in nodes(p):
+            if node.getClass().getSimpleName() != "ArrowEvalPythonExec":
+                continue
+            udfs = node.udfs()
+            for i in range(udfs.size()):
+                args = udfs.apply(i).children()
+                for j in range(args.size()):
+                    e = args.apply(j)
+                    n_udf_inputs += 1
+                    if e.dataType().typeName() == "long":
+                        assert "RLIKE" not in e.toString(), e.toString()
+                        continue
+                    masked = e.getClass().getSimpleName() == "CaseWhen" and e.elseValue().isEmpty()
+                    value = e.branches().apply(0)._2() if masked else None
+                    assert masked and value.getClass().getSimpleName() == "AttributeReference", \
+                        e.toString()
+    assert n_udf_inputs == 5  # masked href + base, three int64 bloom keys
 
 
 def test_schedule_wave_keeps_tail(spark):

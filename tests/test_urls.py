@@ -2,10 +2,12 @@
 reference suite (tests/test_normalize_url.py) plus deep-crawl identity
 cases (utils.py:2334-2390 semantics)."""
 
-import pandas as pd
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
+from crawl4ai_spark.functions import urls
 from crawl4ai_spark.functions.urls import (
     efficient_normalize,
     get_base_domain,
@@ -15,7 +17,6 @@ from crawl4ai_spark.functions.urls import (
     normalize_deep_udf,
     normalize_url,
     normalize_url_for_deep_crawl,
-    with_canonical,
 )
 
 NORMALIZE_CASES = [
@@ -123,18 +124,18 @@ def test_light_normalize_expr_matches_python(spark):
 
 
 def test_with_canonical_equals_udf_on_mixed_corpus(spark):
-    """The hybrid JVM-fast-path canonicalizer must agree with the exact
-    stdlib UDF on every URL shape — clean, messy, relative, dotted,
-    tracking-tainted, fragmented, uppercase, short."""
+    """normalize_deep_udf (JVM guard + stdlib residue) must agree with the
+    stdlib canonicalizer on every URL shape — clean, messy, relative,
+    dotted, tracking-tainted, fragmented, uppercase, short."""
     hrefs = [
-        # fast-path shapes
+        # guard (JVM) shapes
         "https://Example.COM/a/b/",
         "http://host7.example.com/view/item42",
         "https://x.com",
         "https://x.com/",
         "HTTPS://X.com/A//B///",
         "https://x.com/a-b_c~d",
-        # slow-path shapes
+        # stdlib shapes
         "https://x.com/p?utm_source=a&q=1#frag",
         "https://x.com/p?b=2&a=&c=3",
         "/relative/path",
@@ -147,14 +148,79 @@ def test_with_canonical_equals_udf_on_mixed_corpus(spark):
         None,
         "",
         "https://x.com/.hidden/dir",
+        # trailing line terminators: Java's $ would accept these
+        "https://x.com\n",
+        "https://x.com\r\n",
+        "https://x.com/a\n",
+        "https://x.com/a\u2028",
     ]
     base = "https://base.example.com/dir/page"
     df = spark.createDataFrame([(i, h, base) for i, h in enumerate(hrefs)], "i int, href string, base string")
     got = {
         r["i"]: r["canon"]
-        for r in with_canonical(df, "href", "base", "canon").collect()
+        for r in df.select("i", normalize_deep_udf("href", "base").alias("canon")).collect()
     }
     for i, h in enumerate(hrefs):
         expected = normalize_url_for_deep_crawl(h, base)
         assert got[i] == expected, (h, got[i], expected)
-    assert len(got) == len(hrefs)  # split-union loses no rows
+    assert len(got) == len(hrefs)
+
+
+# alphabet, schemes and hosts of test_fuzz_canonicalizer_parity, plus the
+# shapes on the edges of normalize_deep_udf's JVM guard
+_FUZZ_CHARS = "abcXYZ019-._~:/?#[]@!$&'()*+,;=% \té中"
+_FUZZ_SCHEMES = ["http://", "https://", "ftp://", "", "//", "mailto:", "HTTPS://", "hTtP://"]
+_FUZZ_HOSTS = ["example.com", "WWW.Example.Com", "sub.x.co.uk:81", "localhost", "a.b", "",
+               "x.com:443", "u@Host.com"]
+# the first five pass the guard, the rest send the href to the UDF
+_FUZZ_PIECES = ["/", "//a//", "%7E", "/A/B/", "/p1", "\x7f", "\t", "\n", "\r", "é中", "/./", "/../",
+                "\\"]
+
+
+def _adversarial_rows(n: int, seed: int = 20):
+    rng = random.Random(seed)
+    rows = []
+    for i in range(n):
+        # half the rows are built from guard-passing pieces only
+        chars, pieces = rng.choice([("", _FUZZ_PIECES[:5]), (_FUZZ_CHARS, _FUZZ_PIECES)])
+        rest = "".join(
+            rng.choice(chars) if chars and rng.random() < 0.4 else rng.choice(pieces)
+            for _ in range(rng.randint(0, 6))
+        )
+        href = rng.choice(_FUZZ_SCHEMES) + rng.choice(_FUZZ_HOSTS) + rest
+        base = rng.choice([href, href, "https://example.com/a/b", "http://shop.co.uk/dir/page?x=1", None, ""])
+        rows.append((i, href, base))
+    rows += [(n, None, "https://x.com/"), (n + 1, "", "https://x.com/"), (n + 2, None, None)]
+    return rows
+
+
+def test_normalize_deep_udf_guard_parity_adversarial(spark):
+    """Row-by-row parity of the guarded column with the stdlib function on
+    ~2k seeded adversarial hrefs (hrefs on which stdlib raises are covered
+    by the next test), with both sides of the guard well populated."""
+
+    def stdlib(h, b):
+        try:
+            return normalize_url_for_deep_crawl(h, b), None
+        except ValueError as e:
+            return None, e
+
+    rows = [r for r in _adversarial_rows(2000) if stdlib(r[1], r[2])[1] is None]
+    assert len(rows) > 1500
+    df = spark.createDataFrame(rows, "i int, href string, base string")
+    got = {r["i"]: r["c"] for r in df.select("i", normalize_deep_udf("href", "base").alias("c")).collect()}
+    bad = [(h, b, got[i], stdlib(h, b)[0]) for i, h, b in rows if got[i] != stdlib(h, b)[0]]
+    assert not bad, bad[:5]
+    n_simple = df.filter(F.col("href").rlike(urls._SIMPLE_URL_RE) & ~F.col("href").contains("/.")).count()
+    assert 300 < n_simple < len(rows) - 300
+
+
+def test_normalize_deep_udf_stdlib_errors_still_raise(spark):
+    """An href (or a base) that stdlib rejects must reach the UDF and fail
+    the query, exactly as before the guard existed."""
+    for href, base in [("https://[x/", "https://[x/"), ("https://x.com/a", "https://[x/")]:
+        with pytest.raises(ValueError):
+            normalize_url_for_deep_crawl(href, base)
+        df = spark.createDataFrame([(href, base)], "href string, base string")
+        with pytest.raises(Exception, match="Invalid IPv6 URL"):
+            df.select(normalize_deep_udf("href", "base")).collect()
